@@ -44,29 +44,6 @@ def alias_index() -> dict[str, str]:
     return index
 
 
-def canonical_names() -> list[str]:
-    """All canonical names in taxonomy order (deduplicated, first wins)."""
-    seen: dict[str, None] = {}
-    for _s, _k, canonical, _a in TAXONOMY_ROWS:
-        seen.setdefault(canonical)
-    return list(seen)
-
-
-def taxonomy_rows() -> list[tuple[str, str, str, int]]:
-    """Flatten to (section, canonical, alias, alias_rank) rows — the broadcast
-    dimension-table shape used by the relational normalization query (the
-    alias_rank column freezes YAML order for deterministic joins)."""
-    out: list[tuple[str, str, str, int]] = []
-    rank = 0
-    for section, _key, canonical, aliases in TAXONOMY_ROWS:
-        out.append((section, canonical, canonical, rank))
-        rank += 1
-        for alias in aliases:
-            out.append((section, canonical, alias, rank))
-            rank += 1
-    return out
-
-
 @lru_cache(maxsize=1)
 def _alias_scan_cache() -> list[tuple[str, str, int, dict[str, int]]]:
     """Per-alias precomputed (alias, canonical, len, char-multiset) for the
@@ -244,15 +221,6 @@ def normalize_rows(rows: list[list[str]]) -> list[list[str]]:
         # empty rows); fail-soft here: an empty row passes through unchanged
         out.append([row[0], canonical] + row[1:] if row else [])
     return out
-
-
-def unmapped_labels(normalized: list[list[str]]) -> list[str]:
-    """Labels whose canonical came back empty (ref normalize.py:149-161)."""
-    return [
-        row[0]
-        for row in normalized
-        if len(row) >= 2 and row[0].strip() and not row[1].strip()
-    ]
 
 
 def first_wins_mappings(mappings_in_order: list[dict[str, str]]) -> dict[str, str]:

@@ -17,12 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-LINEAGE_SCHEMA = (
-    "partition_id int, run_id string, url_min string, url_max string, "
-    "n_rows long, n_ok long, n_error long"
-)
-
-
 def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
     """Per-partition lineage/metrics: derived from the extraction output with
     spark_partition_id(), aggregated JVM-side."""

@@ -8,7 +8,7 @@ These extend the reference's per-document pipeline (cf.
 corpus-level curation steps a 100 TB training-data build needs.  Every
 operator is pure JVM column expressions + standard joins (no Python in any
 hot path) and each driver query has an exact DuckDB oracle in
-__spark_entry__.oracle_sql.
+pdf_parser_spark/faces/curation.py.
 
 Scale notes are per-operator; the shared principles:
 - candidate generation is always bounded (broadcast benchmark set, LSH band

@@ -244,88 +244,11 @@ def synthetic_media(df: DataFrame) -> DataFrame:
     return df.select("doc_id").mapInPandas(fn, "doc_id long, payload binary")
 
 
-RESIZE_SCHEMA = (
-    "doc_id long, width int, height int, payload binary"
-)
-FRAME_SCHEMA = (
-    "doc_id long, frame_index int, frame_ts_ms long, payload binary"
-)
-
-
-def resize_stub(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic fake resize: a real implementation decodes with PIL and
-    re-encodes; the stub derives a content-addressed payload of bounded size
-    so batch shapes and memory behavior are realistic."""
-    if payload is None:
-        raise NotImplementedError("real image resize requires codec libs (PIL)")
-    import hashlib
-
-    seed = hashlib.md5(payload + f"{width}x{height}".encode()).digest()
-    # repeat the digest to a size proportional to the target area (capped)
-    size = min(width * height // 64 + 16, 4096)
-    return (seed * (size // len(seed) + 1))[:size]
-
-
-def resize_images(
-    df: DataFrame, width: int = 64, height: int = 64, payload_col: str = "payload"
-) -> DataFrame:
-    """mapInPandas resize stage: (doc_id, payload) -> (doc_id, width, height,
-    payload).  Arrow batches bound memory for multi-MB payloads."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                out = resize_stub(bytes(payload) if payload is not None else b"", width, height)
-                recs.append({
-                    "doc_id": doc_id, "width": width, "height": height,
-                    "payload": out,
-                })
-            yield pd.DataFrame.from_records(
-                recs, columns=["doc_id", "width", "height", "payload"]
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(fn, schema=RESIZE_SCHEMA)
-
-
 # frame-sampling knobs, shared with the m_frame_sample oracle (anti-drift:
 # the SQL twin interpolates these so a knob change can never silently
 # diverge engine vs oracle — ADVICE r2)
 SAMPLE_EVERY_DEFAULT = 2
 MAX_FRAMES_DEFAULT = 8
-
-
-def sample_frames(
-    df: DataFrame, every_ms: int = 1000,
-    max_frames: int = MAX_FRAMES_DEFAULT, payload_col: str = "payload"
-) -> DataFrame:
-    """mapInPandas frame-sampling stage for video-like payloads: one input row
-    fans out to <= max_frames rows (doc_id, frame_index, frame_ts_ms, payload).
-    The decode is stubbed (deterministic slices of the payload); the Spark-side
-    contract — 1:N row fan-out inside an Arrow batch, bounded output size — is
-    the real thing a video pipeline needs."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            recs = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                raw = bytes(payload) if payload is not None else b""
-                # fake "duration": 1 ms per byte
-                n_frames = min(max(len(raw) // every_ms, 1), max_frames)
-                for i in range(n_frames):
-                    ts = i * every_ms
-                    frame = hashlib.md5(raw + ts.to_bytes(8, "big")).digest()
-                    recs.append({
-                        "doc_id": doc_id, "frame_index": i,
-                        "frame_ts_ms": ts, "payload": frame,
-                    })
-            yield pd.DataFrame.from_records(
-                recs, columns=["doc_id", "frame_index", "frame_ts_ms", "payload"]
-            )
-
-    return df.select("doc_id", payload_col).mapInPandas(fn, schema=FRAME_SCHEMA)
 
 
 def binary_stats(documents: DataFrame) -> DataFrame:

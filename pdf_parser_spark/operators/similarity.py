@@ -118,8 +118,8 @@ def kmeans_fit(
     the full fit; sample-seeded fits lose whole clusters when two low
     sampled ids share a basin).  At 10^12 rows this is the only viable fit —
     the corpus is touched once, at assignment time inside ivf_topk, never
-    during the iterations.  Persist the result with save_centroids so later
-    queries skip the fit entirely."""
+    during the iterations.  Pass the result to ivf_topk(centroids=...) so
+    later queries skip the fit."""
     emb = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -143,23 +143,6 @@ def kmeans_fit(
             break
         centroids = new
     return centroids
-
-
-def save_centroids(spark, centroids: list[list[float]], path: str) -> None:
-    """Persist a fitted quantizer as a (cluster, centroid) parquet table so
-    the fit cost is paid once and amortized over every later ivf_topk call
-    (the docstring's 10^12 amortization, now a real mode).  k x dim doubles:
-    one file, broadcast-sized forever."""
-    spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cluster INT, centroid ARRAY<DOUBLE>",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_centroids(spark, path: str) -> list[list[float]]:
-    """Read back a save_centroids table in cluster order."""
-    rows = spark.read.parquet(path).orderBy("cluster").collect()
-    return [[float(x) for x in r["centroid"]] for r in rows]
 
 
 def ivf_topk(
@@ -400,7 +383,7 @@ def pq_fit(
     sum(iters); the (sampled) source is scanned once per round, not M
     times.  Returns codebooks[sub][cluster][dim_in_sub], driver-resident
     M x ksub x (dim/m) doubles; at 10^12 rows fit on the md5 sample and
-    persist with save_pq_codebooks."""
+    pass the codebooks to pq_topk(codebooks=...)."""
     first = embeddings.select("embedding").first()
     dim = len(first["embedding"])
     if dim % m:
@@ -545,29 +528,6 @@ def pq_topk(
         .where(F.col("rank") <= k)
         .orderBy("query_id", "rank")
     )
-
-
-def save_pq_codebooks(spark, codebooks: list[list[list[float]]], path: str) -> None:
-    """Persist fitted PQ codebooks as (sub, cluster, centroid) parquet —
-    the same amortization save_centroids gives IVF: the 4x-Lloyd fit cost
-    (the dominant PQ cost in bench.py) is paid once; every later pq_topk
-    loads M x ksub x subdim doubles."""
-    spark.createDataFrame(
-        [(s, i, [float(x) for x in c])
-         for s, book in enumerate(codebooks) for i, c in enumerate(book)],
-        "sub INT, cluster INT, centroid ARRAY<DOUBLE>",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_pq_codebooks(spark, path: str) -> list[list[list[float]]]:
-    """Read back save_pq_codebooks in (sub, cluster) order."""
-    rows = spark.read.parquet(path).orderBy("sub", "cluster").collect()
-    books: list[list[list[float]]] = []
-    for r in rows:
-        while len(books) <= r["sub"]:
-            books.append([])
-        books[r["sub"]].append([float(x) for x in r["centroid"]])
-    return books
 
 
 DIM_LADDER = (8, 16, 32, 64)  # truncation steps audited vs the full dim

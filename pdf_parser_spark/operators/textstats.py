@@ -2,7 +2,7 @@
 language-ID heuristic, quality scoring, document fingerprinting.
 
 All pure JVM-side column expressions (whole-stage codegen, no Python) — each
-has an exact DuckDB-SQL oracle in __spark_entry__.oracle_sql.
+has an exact DuckDB-SQL oracle in pdf_parser_spark/faces/text.py.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Relational query plans: the SURVEY.md §2 cross-document operators
 re-expressed over the driver's TPC-H-ish tables, plus classic scan/join/agg
-benchmarks.  Every query here has a DuckDB oracle in __spark_entry__.
+benchmarks.  Every query here has a DuckDB oracle in pdf_parser_spark/faces.
 
 Plan-quality notes (verified via .explain("formatted")):
 - dimension joins (region/nation/part) broadcast — no shuffle on the big side
@@ -1248,8 +1248,12 @@ def _two_phase_rank(
     exact running sum of that column over the same order via the same
     offset trick.  Appends ``rank_name`` (1-based BIGINT) and, when
     requested, ``cum`` (BIGINT)."""
+    # persist: the stats branch and the rank branch below must read ONE
+    # range shuffle.  Without exchange reuse each branch would plan its own,
+    # and each range shuffle samples its own boundaries, so the broadcast
+    # offsets would be joined to another split's _pid values.
     d = df.repartitionByRange(parts, *order_cols).withColumn(
-        "_pid", F.spark_partition_id())
+        "_pid", F.spark_partition_id()).persist()
     aggs = [F.count("*").alias("_c")]
     if cum_col is not None:
         aggs.append(F.sum(cum_col).alias("_s"))

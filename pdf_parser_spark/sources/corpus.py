@@ -389,7 +389,7 @@ def _press_release(rng: random.Random) -> tuple[str, str]:
 
 
 # filing-shaped text flavor for the DRIVER documents table: doc_id %
-# FILING_FLAVOR_MOD == FILING_FLAVOR_REM rows of _docs_as_pages swap their
+# FILING_FLAVOR_MOD == FILING_FLAVOR_REM rows of docs_as_pages swap their
 # webtext for filing_text(doc_id), so the flagship sf0.01 hash
 # discriminates the G1 splitter, the T8/T16 table machinery, the E-field
 # cover extraction, and W1 sequencing over REAL (company, period) groups —

@@ -9,7 +9,7 @@ in the FIXTURES.md §4 shape so the N6/N7/V8 relational operators have real
 input without any network.
 
 Rows are plain tuples so the SAME data can be (a) a Spark DataFrame and
-(b) inlined as a DuckDB VALUES CTE by ``__spark_entry__.oracle_sql`` — the
+(b) inlined as a DuckDB VALUES CTE by the faces' oracle SQL — the
 correctness gate then checks the relational logic, not the data plumbing.
 """
 

@@ -79,15 +79,6 @@ def dedup_via_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(work, ignore_errors=True)
 
 
-PAGES_TS_SCHEMA = StructType([
-    StructField("doc_id", LongType(), True),
-    StructField("text", StringType(), True),
-    StructField("lang", StringType(), True),
-    StructField("source", StringType(), True),
-    StructField("n_chars", LongType(), True),
-])
-
-
 def stream_dedup_within_watermark(
     spark: SparkSession,
     input_dir: str,

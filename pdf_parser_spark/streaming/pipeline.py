@@ -65,55 +65,6 @@ def streaming_metrics(
     )
 
 
-def stream_upsert_table(
-    spark: SparkSession,
-    input_dir: str,
-    table_path: str,
-    checkpoint_dir: str,
-    key: str = "url",
-) -> StreamingQuery:
-    """Streaming upsert sink: readStream -> foreachBatch(merge_snapshot) —
-    the recrawl loop's write side as one composition (a re-fetched url's
-    row must REPLACE the old one, so an append sink is wrong by
-    construction; foreachBatch is Structured Streaming's official escape
-    hatch to any batch writer, and the table format's COW merge is exactly
-    such a writer).
-
-    Semantics worth stating: foreachBatch is at-least-once (a crashed
-    batch can replay), but merge_snapshot is IDEMPOTENT for identical
-    input — replaying batch N re-deletes and re-inserts the same keys to
-    the same values, so the TABLE converges even when the hook fires
-    twice; that idempotence is what makes at-least-once acceptable here,
-    the same argument Delta's foreachBatch-MERGE pattern makes.  Each
-    micro-batch commits one table version, so the version history IS the
-    micro-batch lineage."""
-    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
-
-    def _upsert(batch_df, batch_id: int) -> None:
-        from pdf_parser_spark.sources import tableformat as tf
-
-        if batch_df.isEmpty():
-            return
-        # dedup within the batch (two versions of one url in one batch:
-        # keep the max warc_ts, ties by text) before the keyed merge
-        from pyspark.sql import Window as W
-        from pyspark.sql import functions as FF
-        w = W.partitionBy(key).orderBy(
-            FF.col("warc_ts").desc_nulls_last(), FF.col("text").desc())
-        latest = (batch_df.withColumn("_rn", FF.row_number().over(w))
-                  .where(FF.col("_rn") == 1).drop("_rn"))
-        try:
-            tf.merge_snapshot(batch_df.sparkSession, latest, table_path, key)
-        except FileNotFoundError:
-            tf.append_snapshot(latest, table_path)
-
-    return (
-        pages.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
 def stream_delete_table(
     spark: SparkSession,
     input_dir: str,

@@ -4,11 +4,9 @@
 from pdf_parser_spark.core.taxonomy import (
     alias_index,
     backfill_mappings,
-    canonical_names,
     first_wins_mappings,
     match_line_item,
     normalize_rows,
-    unmapped_labels,
 )
 
 
@@ -18,7 +16,6 @@ def test_index_size_and_content():
     assert len(idx) == 224
     assert idx["net revenues"] == "Revenue"
     assert idx["total assets"] == "Total Assets"
-    assert len(canonical_names()) > 50
 
 
 def test_exact_match():
@@ -77,11 +74,6 @@ def test_normalize_context_flips_to_non_current():
     ]
     out = normalize_rows(rows)
     assert out[1][1] == "Long-Term Investments"
-
-
-def test_unmapped_collection():
-    rows = normalize_rows([["Frobnication reserve", "1", "2"], ["Net revenues", "3", "4"]])
-    assert unmapped_labels(rows) == ["Frobnication reserve"]
 
 
 def test_first_wins_and_backfill():

@@ -60,6 +60,41 @@ def test_two_phase_rank_matches_naive_window(spark):
     assert got == want
 
 
+def test_two_phase_rank_without_exchange_reuse(spark):
+    """The rank branch and the per-partition stats branch must agree on the
+    range boundaries even when Spark plans two separate range shuffles:
+    with exchange reuse off, each shuffle samples its own boundaries, and
+    more rows than the sampler keeps make those samples differ."""
+    df = spark.range(40_000).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 7919 % 10_007).alias("v"),
+        (F.col("id") % 13 + 1).alias("wt"),
+    ).repartition(4)
+    order = [F.col("v").desc(), F.col("k").asc()]
+    w = Window.orderBy(*order)
+    want = {
+        r["k"]: (r["rk"], r["cum"])
+        for r in df.withColumn("rk", F.row_number().over(w))
+        .withColumn(
+            "cum",
+            F.sum("wt").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+        )
+        .collect()
+    }
+    prev = spark.conf.get("spark.sql.exchange.reuse")
+    spark.conf.set("spark.sql.exchange.reuse", "false")
+    try:
+        got = {
+            r["k"]: (r["rk"], r["cum"])
+            for r in _two_phase_rank(
+                df, order, rank_name="rk", cum_col="wt", parts=16
+            ).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.exchange.reuse", prev)
+    assert got == want
+
+
 def test_two_phase_rank_more_partitions_than_rows(spark):
     # parts >> N: most range partitions are empty; offsets must still chain
     df = _tied_frame(spark, n=5)

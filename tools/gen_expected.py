@@ -22,7 +22,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-RUN_TS = "2026-08-16T00:00:00Z"  # must match __spark_entry__.RUN_TS
+RUN_TS = "2026-08-16T00:00:00Z"  # must match pdf_parser_spark.faces.RUN_TS
 # the driver's correctness-gate scale (override for other checkouts)
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 OUT = (sys.argv[1] if len(sys.argv) > 1
@@ -50,7 +50,8 @@ def _driver_doc_rows() -> list[tuple]:
         table["text"].to_pylist(),
     ):
         url = f"doc://{source}/{doc_id}"
-        # the filing-shaped flavor rule — identical to _docs_as_pages
+        # the filing-shaped flavor rule, identical to docs_as_pages
+        # (pdf_parser_spark/faces/shared.py)
         if doc_id % FILING_FLAVOR_MOD == FILING_FLAVOR_REM:
             text = filing_text(doc_id)
         d = extract_document(url, None, text, RUN_TS)
@@ -264,10 +265,11 @@ def main() -> None:
 Expected per-document outputs of the core extraction path (no Spark) over the
 deterministic inputs the driver-gate queries use: sf0.01 documents for
 `extract_pipeline`, the seed-42 synthetic corpus for `qc_structural` (96 docs)
-and `x_fleet_cross_validate` (60 docs).  `__spark_entry__.oracle_sql` inlines
-these as VALUES CTEs and re-expresses the distributed logic (W1 window,
-quality roll-up, V8 facts join) in DuckDB SQL; regenerate after any change to
-the extraction semantics (differential fuzz + golden tests gate those).
+and `x_fleet_cross_validate` (60 docs).  The oracle SQL of those faces
+(`pdf_parser_spark/faces/`) inlines these as VALUES CTEs and re-expresses the
+distributed logic (W1 window, quality roll-up, V8 facts join) in DuckDB SQL;
+regenerate after any change to the extraction semantics (differential fuzz +
+golden tests gate those).
 """
 
 EXTRACT_DOC_COLS = [
