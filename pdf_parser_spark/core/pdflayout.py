@@ -380,8 +380,8 @@ _RULE_OP = re.compile(
     rb"\((?:[^()\\]|\\.)*\)"
     rb"|(?P<mx>-?[0-9.]+)\s+(?P<my>-?[0-9.]+)\s+m(?![\w*])"
     rb"|(?P<lx>-?[0-9.]+)\s+(?P<ly>-?[0-9.]+)\s+l(?![\w*])"
-    rb"|(?P<rx>-?[0-9.]+)\s+(?P<ry>-?[0-9.]+)\s+(?P<rw>[0-9.]+)\s+"
-    rb"(?P<rh>[0-9.]+)\s+re(?![\w*])"
+    rb"|(?P<rx>-?[0-9.]+)\s+(?P<ry>-?[0-9.]+)\s+(?P<rw>-?[0-9.]+)\s+"
+    rb"(?P<rh>-?[0-9.]+)\s+re(?![\w*])"
     rb"|(?<![\w*)])(?P<paint>[SsBbFfn]\*?)(?![\w*])"
 )
 
@@ -405,10 +405,12 @@ def _rulings(stream: bytes) -> tuple[list, list]:
                 pend.append((cx, cy, nx, ny))
             cx, cy = nx, ny
         elif m.group("rx") is not None:
-            x0, y0 = float(m.group("rx")), float(m.group("ry"))
-            w, hh = float(m.group("rw")), float(m.group("rh"))
-            pend += [(x0, y0, x0 + w, y0), (x0, y0 + hh, x0 + w, y0 + hh),
-                     (x0, y0, x0, y0 + hh), (x0 + w, y0, x0 + w, y0 + hh)]
+            # width/height may be negative (PDF 32000-1 §8.5.2.1)
+            x, y = float(m.group("rx")), float(m.group("ry"))
+            x0, x1 = sorted((x, x + float(m.group("rw"))))
+            y0, y1 = sorted((y, y + float(m.group("rh"))))
+            pend += [(x0, y0, x1, y0), (x0, y1, x1, y1),
+                     (x0, y0, x0, y1), (x1, y0, x1, y1)]
         elif m.group("paint") is not None:
             if not m.group("paint").startswith(b"n"):
                 for x0, y0, x1, y1 in pend:
@@ -468,16 +470,19 @@ def _ruled_cells(
         cells: dict[tuple[int, int], list] = {}
         for r in runs:
             rx, ry = r[0], r[1]
-            if not (bot <= ry <= top and xs[0] <= rx <= xs[-1]):
+            if not (bot - RULE_TOL <= ry <= top
+                    and xs[0] <= rx <= xs[-1] + RULE_TOL):
                 continue
-            row = next(
-                (i for i in range(len(gys) - 1)
-                 if gys[i + 1] < ry <= gys[i]), None)
-            col = next(
-                (j for j in range(len(xs) - 1)
-                 if xs[j] <= rx < xs[j + 1]), None)
-            if row is not None and col is not None:
-                cells.setdefault((row, col), []).append(r)
+            # row bands are (lower, upper], column bands [left, right);
+            # a run on (or within RULE_TOL of) the bottom or rightmost
+            # ruling falls in the last band instead of in none.  The top
+            # and left edges keep no tolerance: a caption baseline on the
+            # top ruling, or a run left of the first column, stays out.
+            row = next((i for i in range(len(gys) - 2)
+                        if ry > gys[i + 1]), len(gys) - 2)
+            col = next((j for j in range(len(xs) - 2)
+                        if rx < xs[j + 1]), len(xs) - 2)
+            cells.setdefault((row, col), []).append(r)
         if not cells:
             continue
         table_id += 1

@@ -311,7 +311,7 @@ FACES = [
             )
             SELECT CAST(count(*) AS BIGINT) AS n_users,
                    CAST(sum(n_events) AS BIGINT) AS t_events,
-                   CAST((10000 * (2 * sum(rk * n_events)
+                   CAST((10000 * (2 * sum(CAST(rk AS HUGEINT) * n_events)
                          - (count(*) + 1) * sum(n_events)))
                         // (count(*) * sum(n_events)) AS BIGINT)
                        AS gini_bp

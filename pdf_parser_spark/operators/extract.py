@@ -9,6 +9,11 @@ never a stage failure.
 Skew handling (north_rule): upstream of the stage, rows are repartitioned by
 ``xxhash64(url, salt)`` where the salt spreads documents of heavy hosts across
 partitions; Arrow batch size is bounded in session.py because rows are fat.
+Task count follows the input's row count (``partition_count``): every PySpark
+task pays a fixed round-trip of ~250 ms or more, so the stage gets about one
+task per ROWS_PER_TASK rows (~8 s of kernel at ~4 ms/doc) in whole waves of
+one task per core, clamped so that small inputs run in one wave and large ones
+in at most TASKS_PER_CORE waves, which amortizes the straggler tail.
 (Salting redistributes the skewed units BEFORE the stage — the static
 counterpart of DS2's runtime data stealing, ICDE 2021, PAPERS.md; the
 batch-at-a-time Arrow transfer is the vectorized-UDF execution model of
@@ -23,7 +28,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pdf_parser_spark.session import DEFAULT_SHUFFLE_PARTITIONS
+# Sizing of the extraction stage (see partition_count).
+ROWS_PER_TASK = 2048
+TASKS_PER_CORE = 12
 
 RESULT_SCHEMA = """
     url string,
@@ -86,6 +93,32 @@ def _extract_batches(run_ts: str):
     return fn
 
 
+def partition_count(rows: int, parallelism: int) -> int:
+    """Extraction-stage task count for ``rows`` input rows on
+    ``parallelism`` cores: about one task per ROWS_PER_TASK rows, rounded
+    up to whole waves of ``parallelism`` tasks and clamped to
+    [1, TASKS_PER_CORE] waves.
+
+    One wave keeps every core busy however small the input; the cap is
+    the straggler bound.  Per-document cost varies ~10x with document
+    family, so coarse tasks leave cores idle in the last wave: event-log
+    analysis at 4 tasks/core measured 16% slot idle from the tail alone,
+    and at 12 waves the tail amortizes to ~4% (the cluster-scale
+    ``~10 x executors x cores`` sizing for skewed Python-heavy stages).
+    Whole waves, because a part wave runs its few tasks with the other
+    cores idle.  Between the two bounds the row count decides, because
+    every PySpark task pays a fixed round-trip: a trivial mapInPandas
+    task costs ~250 ms at local[1] against a 1.5 ms generator body, and
+    48 trivial tasks take 3.6-4.0 s at local[4] against 0.34 s for 4.  A
+    run_batch task also opens, writes and commits its own sink files, so
+    its fixed cost is larger: at local[4] over 16,384-32,768 rows,
+    2,048-row tasks ran 5-26% faster than 512-row tasks in each of four
+    seed/size pairs (ROADMAP.md has the table).  At ~4 ms/doc a 2,048-row
+    task runs ~8 s of kernel."""
+    waves = -(-rows // (ROWS_PER_TASK * parallelism))
+    return min(max(waves, 1), TASKS_PER_CORE) * parallelism
+
+
 def salted_repartition(
     pages: DataFrame, num_partitions: int | None = None, salt_buckets: int = 8
 ) -> DataFrame:
@@ -103,16 +136,15 @@ def salted_repartition(
     (operators/pipeline.py), which hashes the full payload anyway.  Cheap
     column ops — no Python; placement-only, so results never depend on it.
 
-    Partition count defaults to 12 tasks per core: per-document cost varies
-    ~10x with document family, so coarse tasks leave cores idle in the last
-    wave — event-log analysis at 4 tasks/core measured 16% slot idle (84%
-    utilization) from the straggler tail alone, with ZERO per-task time
-    inflation; at 12 waves the tail amortizes to ~4%.  Same reasoning as
-    cluster-scale `~10 x executors x cores` sizing for skewed Python-heavy
-    stages; tasks stay >1 s so per-task scheduling overhead is noise."""
-    n = num_partitions or max(
-        DEFAULT_SHUFFLE_PARTITIONS,
-        12 * pages.sparkSession.sparkContext.defaultParallelism,
+    Partition count defaults to ``partition_count`` of the input's row
+    count, taken by one ``count()`` of ``pages``.  That count is a separate
+    job which re-executes ``pages``' lineage: cheap for a parquet scan (no
+    column is decoded), but a full pass when ``pages`` has shuffles or
+    hashing upstream, so such callers size the stage from their source and
+    pass ``num_partitions`` (``operators/pipeline.run_batch`` does).  An
+    explicit ``num_partitions`` skips the count."""
+    n = num_partitions or partition_count(
+        pages.count(), pages.sparkSession.sparkContext.defaultParallelism
     )
     salt_inputs = [F.col("url"), F.lit("salt")]
     for c in ("text", "html"):

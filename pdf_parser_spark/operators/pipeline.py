@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators.checkpoint import pending_urls, write_checkpoint
 from pdf_parser_spark.operators.consistency import finalize
-from pdf_parser_spark.operators.extract import extract_stage
+from pdf_parser_spark.operators.extract import extract_stage, partition_count
 
 CONSISTENCY_COLS = [
     "url", "company_key", "filing_sequence", "mappings_consistent",
@@ -108,7 +108,10 @@ def run_batch(
     todo = pend(spark, pages, out_dir) if resume else pages
     if dedup:
         todo = dedup_pages(todo)
-    extracted = extract_stage(todo, run_ts=run_ts)
+    # Size the stage from the raw input, an upper bound on `todo`: counting
+    # `todo` itself would re-run the anti-join and the dedup shuffle.
+    n = partition_count(pages.count(), spark.sparkContext.defaultParallelism)
+    extracted = extract_stage(todo, run_ts=run_ts, num_partitions=n)
     # Relational stages read the materialized, column-pruned sink returned by
     # the checkpoint writer (single listing/schema-inference pass).
     if versioned:

@@ -1591,21 +1591,31 @@ def w15_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     event counts, the single-number inequality summary behind w12's
     Pareto curve (0 = everyone equally active, ->10000 = one user is the
     whole crawl; THE standard skew headline for traffic/bot reports).
+    The arithmetic is in ``_gini_bp``."""
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    per_user = ev.groupBy("user_id").agg(
+        F.count("*").cast("long").alias("n_events"))
+    return _gini_bp(per_user)
+
+
+def _gini_bp(per_user: DataFrame) -> DataFrame:
+    """per_user(user_id, n_events) -> one row (n_users, t_events, gini_bp).
 
     Exact integers end to end: with counts ranked ASCENDING by
     (n_events, user_id) — a total order, rank i in 1..n — the classic
     rank-weighted form G = (2*sum(i*x_i) - (n+1)*sum(x)) / (n*sum(x))
-    becomes ONE floor division of nonnegative BIGINTs:
+    becomes ONE floor division of nonnegative integers:
     gini_bp = (10000 * (2*sum(i*x_i) - (n+1)*T)) div (n*T) — the
     numerator is provably >= 0 for ascending ranks, so div == floor and
-    both engines agree bit-for-bit.
+    both engines agree bit-for-bit.  sum(i*x_i) is bounded only by n*T,
+    which passes 2^63 at 10^9 users x 10^10 events; BIGINT overflows
+    there in Spark (wraps, or raises under ANSI) while DuckDB promotes
+    SUM to HUGEINT, so the sum and the numerator run in DECIMAL(38,0)
+    and only gini_bp (<= 10000) is cast to BIGINT.
 
     Scale: the rank is _two_phase_rank's range-partitioned exact rank
     over the user dim (the w10/w12 machinery reused — NO
     single-partition window anywhere), then one algebraic aggregate."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    per_user = ev.groupBy("user_id").agg(
-        F.count("*").cast("long").alias("n_events"))
     ranked = _two_phase_rank(
         per_user,
         [F.col("n_events").asc(), F.col("user_id").asc()],
@@ -1615,14 +1625,15 @@ def w15_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked.agg(
             F.count("*").cast("long").alias("n_users"),
             F.sum("n_events").cast("long").alias("t_events"),
-            F.sum(F.col("rk") * F.col("n_events")).cast("long")
+            F.sum(F.col("rk").cast("decimal(38,0)") * F.col("n_events"))
             .alias("_rx"),
         )
         .select(
             "n_users", "t_events",
             F.expr(
-                "CAST((10000 * (2 * _rx - (n_users + 1) * t_events))"
-                " div (n_users * t_events) AS BIGINT)"
+                "CAST((10000 * (2 * _rx - (CAST(n_users AS DECIMAL(38,0))"
+                " + 1) * t_events)) div (CAST(n_users AS DECIMAL(38,0))"
+                " * t_events) AS BIGINT)"
             ).alias("gini_bp"),
         )
     )

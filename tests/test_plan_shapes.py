@@ -146,6 +146,42 @@ def test_extraction_has_single_shuffle(spark, pages_parquet):
     assert tree.count("Exchange") == 1, p
 
 
+def test_partition_count_sizes_by_rows():
+    """The extraction stage's task count: about one task per ROWS_PER_TASK
+    rows in whole waves of one task per core, never fewer than one wave,
+    never more than TASKS_PER_CORE waves."""
+    from pdf_parser_spark.operators.extract import (
+        ROWS_PER_TASK, TASKS_PER_CORE, partition_count,
+    )
+
+    p = 4
+    wave = p * ROWS_PER_TASK
+    assert partition_count(0, p) == p
+    assert partition_count(ROWS_PER_TASK - 1, p) == p
+    assert partition_count(1_600, p) == p
+    assert partition_count(wave, p) == p
+    # just past a wave: a second whole wave, not one straggler task
+    assert partition_count(wave + 1, p) == 2 * p
+    assert partition_count(5 * wave, p) == 5 * p
+    assert partition_count(TASKS_PER_CORE * wave, p) == TASKS_PER_CORE * p
+    assert partition_count(TASKS_PER_CORE * wave + 1, p) == TASKS_PER_CORE * p
+    assert partition_count(10**9, p) == TASKS_PER_CORE * p
+    assert partition_count(153_600, 32) == 3 * 32
+
+
+def test_extract_stage_partitions_follow_rows(spark):
+    """24 rows run as one wave of defaultParallelism tasks; an explicit
+    num_partitions still wins."""
+    from pdf_parser_spark.operators.extract import extract_stage
+    from pdf_parser_spark.sources.pages import synthetic_pages
+
+    pages = synthetic_pages(spark, n_docs=24)
+    p = spark.sparkContext.defaultParallelism
+    assert extract_stage(pages, run_ts="t").rdd.getNumPartitions() == p
+    ext = extract_stage(pages, run_ts="t", num_partitions=16)
+    assert ext.rdd.getNumPartitions() == 16
+
+
 def test_salted_repartition_spreads_heavy_host(spark):
     """The synthetic corpus puts ~30% of urls on one heavy host.  After the
     salted xxhash64 repartition no partition may hold more than ~3x the mean

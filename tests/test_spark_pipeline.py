@@ -4671,6 +4671,48 @@ def test_pdf_ruled_table_strategy_and_hint_gating():
     assert got == [(0, 0, "x0"), (0, 1, "x1"), (1, 0, "y0"), (1, 1, "y1")]
 
 
+def test_pdf_ruled_negative_extent_rectangle():
+    """`re` with a negative width and height is a legal rectangle
+    (PDF 32000-1 §8.5.2.1): drawn from its top-right corner, it must rule
+    the same grid as the positive-extent form."""
+    from pdf_parser_spark.core.pdflayout import parse_tables
+
+    cells = (b"BT /F1 10 Tf 72 590 Td (label) Tj ET\n"
+             b"BT /F1 10 Tf 162 590 Td (42) Tj ET\n")
+    split = b"158 564 m 158 604 l S\n"
+    pos = parse_tables(_mini_pdf(b"68 564 180 40 re S\n" + split + cells))
+    neg = parse_tables(_mini_pdf(b"248 604 -180 -40 re S\n" + split + cells))
+    got = [(r["row"], r["col"], r["text"]) for r in neg]
+    assert got == [(0, 0, "label"), (0, 1, "42")], got
+    assert neg == pos
+
+
+def test_pdf_ruled_runs_on_bottom_and_right_rulings():
+    """A run whose origin sits exactly on (or within RULE_TOL of) the
+    bottom or rightmost ruling belongs to the last row/column band, not
+    to no band at all; interior rulings keep their band semantics.  The
+    top and left edges get no tolerance: runs just above the top ruling
+    or just left of the first column stay out of the table."""
+    from pdf_parser_spark.core.pdflayout import parse_tables
+
+    grid = (
+        b"68 604 m 248 604 l S 68 584 m 248 584 l S 68 564 m 248 564 l S "
+        b"68 564 m 68 604 l S 158 564 m 158 604 l S 248 564 m 248 604 l S\n"
+    )
+    cells = (
+        b"BT /F1 10 Tf 72 564 Td (on bottom) Tj ET\n"
+        b"BT /F1 10 Tf 248 590 Td (on right) Tj ET\n"
+        b"BT /F1 10 Tf 248.5 563.5 Td (corner) Tj ET\n"
+        b"BT /F1 10 Tf 158 584 Td (interior) Tj ET\n"
+        b"BT /F1 10 Tf 100 604.5 Td (above top) Tj ET\n"
+        b"BT /F1 10 Tf 67.5 590 Td (left of first) Tj ET\n"
+    )
+    rows = parse_tables(_mini_pdf(grid + cells))
+    got = [(r["row"], r["col"], r["text"]) for r in rows]
+    assert got == [(0, 1, "on right"), (1, 0, "on bottom"),
+                   (1, 1, "interior corner")], got
+
+
 def test_rollback_semantics(spark, tmp_path):
     """Rollback refusals and marker hygiene: no-op rollback refuses, a
     GC'd target refuses, rolling back TO a compaction commit reads as
@@ -5886,3 +5928,25 @@ def test_w15_gini_known_distributions(spark, tmp_path):
     write([1, 2, 3] + [4] * 7, "skew")
     r = R.w15_activity_gini(spark, str(tmp_path / "skew")).first()
     assert (r["n_users"], r["t_events"], r["gini_bp"]) == (4, 10, 4500)
+
+
+def test_w15_gini_exact_past_bigint(spark):
+    """n_users * t_events > 2^63: the rank-weighted sum and the numerator
+    pass BIGINT, so gini_bp must still equal Python's exact integer
+    arithmetic (BIGINT arithmetic would wrap or raise)."""
+    import random
+
+    import pdf_parser_spark.plans.relational as R
+
+    rng = random.Random(15)
+    counts = [rng.randrange(1, 10**15) for _ in range(2000)]
+    n, t = len(counts), sum(counts)
+    assert t < 2**63 < n * t
+    ranked = sorted(zip(counts, range(n)))
+    rx = sum(i * x for i, (x, _) in enumerate(ranked, start=1))
+    want = 10000 * (2 * rx - (n + 1) * t) // (n * t)
+
+    per_user = spark.createDataFrame(
+        [(u, x) for u, x in enumerate(counts)], "user_id long, n_events long")
+    r = R._gini_bp(per_user).first()
+    assert (r["n_users"], r["t_events"], r["gini_bp"]) == (n, t, want)
